@@ -82,7 +82,7 @@ object AnchorScale {
     def jmap(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => "\"" + k + f"""\":$v%.1f""" }.mkString("{", ",", "}")
     println(
-      f"""{"metric":"anchor_100x","convs":$nConvs,"turns":$nTurns,"triples":$nTriples,"gen_sec":$genSec%.1f,"pipeline_sec":$totalSec%.1f,"turns_per_sec":${nTurns / totalSec}%.1f,"stages":${jmap(stages)},"shuffle_write_gb":${tally.writeTotal / 1e9}%.2f,"shuffle_read_gb":${tally.readTotal / 1e9}%.2f,"peak_stage_write_gb":${tally.writePeak / 1e9}%.2f,"peak_stage":"${tally.peakStage}","cores":$cpus}""")
+      f"""{"metric":"anchor_100x","convs":$nConvs,"turns":$nTurns,"triples":$nTriples,"gen_sec":$genSec%.1f,"pipeline_sec":$totalSec%.1f,"turns_per_sec":${nTurns / totalSec}%.1f,"stage_split":${jmap(stages)},"shuffle_write_gb":${tally.writeTotal / 1e9}%.2f,"shuffle_read_gb":${tally.readTotal / 1e9}%.2f,"peak_stage_write_gb":${tally.writePeak / 1e9}%.2f,"peak_stage":"${tally.peakStage}","cores":$cpus}""")
     spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.lang.management.ManagementFactory
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ml.SectionTagger
@@ -15,8 +15,9 @@ import graft.sources.TranscriptGen
   * The KG section is self-evidencing against host interference (this
   * sandbox is a shared-hypervisor VM whose steal time swings 0-50% on a
   * minutes scale — see BENCH_SCALING.md "host noise"):
-  *   - `kg_stages`  per-stage wall seconds (S1 clean .. S6 emit), so a slow
-  *     total is attributable to a stage rather than opaque;
+  *   - `kg_stage_split` per-stage wall seconds of the shipped plan (S1
+  *     clean .. S6 emit, see [[kgStages]]), so a slow total is
+  *     attributable to a stage rather than opaque;
   *   - `kg_runs`    every end-to-end wall time measured (min is reported as
   *     `kg_pipeline`; a second run is skipped only if the first blew a 120 s
   *     budget, to bound worst-case bench wall time);
@@ -69,53 +70,40 @@ object Bench {
     (r, Measured(sec, cpu, steal))
   }
 
-  /** Stage-attributed wall times over pre-cleaned turns: each stage is
-    * materialized (cache + count) so the deltas isolate one operator. The
-    * sum slightly exceeds a fused end-to-end run (caching overhead), which
-    * is why the headline `kg_pipeline` number comes from the un-instrumented
+  /** Stage-attributed wall times of the shipped plan: every
+    * [[KgPipeline]] stage function the fused run chains, materialized one
+    * by one (cache + count) so the deltas isolate one stage. The sum
+    * slightly exceeds a fused end-to-end run (caching overhead), which is
+    * why the headline `kg_pipeline` number comes from the un-instrumented
     * runs instead. `unpersistEagerly` drops each upstream cache as soon as
     * its consumer materializes — the memory policy the 100M-turn
-    * AnchorScale leg needs; the default keeps the round-4 behavior (all
-    * unpersisted at the end). Returns (per-stage seconds, triple count) —
-    * ONE canonical S1-S6 decomposition serving both the driver bench and
-    * the scale anchor, so the two artifacts can never measure different
+    * AnchorScale leg needs; otherwise every cache stays until the end. The
+    * session's cache is cleared on return (the scoring stage caches its
+    * sector/ISCO frame internally). Returns (per-stage seconds, triple
+    * count) — ONE decomposition serving both the driver bench and the
+    * scale anchor, so the two artifacts can never measure different
     * pipelines.
     */
   def kgStages(spark: SparkSession, tagger: SectionTagger.Trained,
-      turns: org.apache.spark.sql.Dataset[graft.model.Turn],
+      turns: Dataset[graft.model.Turn],
       unpersistEagerly: Boolean = false): (Seq[(String, Double)], Long) = {
     implicit val s: SparkSession = spark
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def phase[A](name: String)(f: => A): A = {
-      val (r, sec) = time(f)
+    def phase[A <: Dataset[_]](name: String)(f: => A): A = {
+      val (r, sec) = time { val d = f; d.cache().count(); d }
       out += (name -> sec)
       r
     }
-    val cleaned = KgPipeline.cleanTurns(turns).cache()
-    phase("s1_clean")(cleaned.count())
-    val tagged = SectionTagger.predict(tagger, cleaned).cache()
-    phase("s2_tag")(tagged.count())
+    val cleaned = phase("s1_clean")(KgPipeline.cleanTurns(turns))
+    val extracted = phase("s2_s3_tag_extract")(
+      KgPipeline.extractTurns(cleaned, tagger, extractDates = false))
     if (unpersistEagerly) cleaned.unpersist()
-    val extracted = TurnExtract.extract(tagged).cache()
-    phase("s3_extract")(extracted.count())
-    if (unpersistEagerly) tagged.unpersist()
-    val convs = ConvFinalize.runClustered(extracted).cache()
-    phase("s4_conv")(convs.count())
+    val convs = phase("s4_conv")(ConvFinalize.runClustered(extracted))
     if (unpersistEagerly) extracted.unpersist()
-    val convSkills = convs.select(col("conv_id"), explode(col("skills")).as("skill"))
-    val si = Scoring.sectorAndIsco(convSkills).cache()
-    phase("s5_scoring")(si.count())
-    val canon = phase("s5_linking") {
-      val c = Linking.canonicalize(
-        convs.toDF().select(explode(col("orgs")).as("surface"))).cache()
-      c.count(); c
-    }
-    val estimates = Scoring.estimates(si.select("conv_id", "isco3"),
-      convs.toDF().select(col("conv_id"), col("location")).filter(col("location").isNotNull))
-    val nTriples = phase("s6_emit")(
-      TripleEmit.run(convs, si.select("conv_id", "sector"), estimates, canon).count())
-    if (!unpersistEagerly) Seq(cleaned, tagged, extracted).foreach(_.unpersist())
-    Seq(convs.toDF(), si, canon).foreach(_.unpersist())
+    val enriched = phase("s5_scoring")(KgPipeline.scoreConvs(convs))
+    val canon = phase("s5_linking")(KgPipeline.linkOrgs(convs)._1)
+    val nTriples = phase("s6_emit")(TripleEmit.runEnriched(convs, enriched, canon)).count()
+    spark.catalog.clearCache()
     (out.toSeq, nTriples)
   }
 
@@ -263,7 +251,7 @@ object Bench {
     val total = all.map(_._2).sum
     val runsJson = kg.runs.map(m => f"${m.sec}%.3f").mkString("[", ",", "]")
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jmap(all)},"sf":"$sfDir","kg_turns":${kg.nTurns},"kg_triples":${kg.nTriples},"turns_per_sec":$turnsPerSec%.1f,"kg_stages":${jmap(kg.stages)},"kg_runs":$runsJson,"kg_cpu_sec":${best.cpuSec}%.1f,"turns_per_cpu_sec":$turnsPerCpuSec%.1f,"cpu_floor":${kg.cpuFloor}%.1f,"anomaly":${kg.anomaly},"steal_pct":${best.stealPct}%.1f,"headline_steal_pct":$headlineSteal%.1f,"ann_recall_at_5":$annRecall%.3f,"cores":$cpus}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jmap(all)},"sf":"$sfDir","kg_turns":${kg.nTurns},"kg_triples":${kg.nTriples},"turns_per_sec":$turnsPerSec%.1f,"kg_stage_split":${jmap(kg.stages)},"kg_runs":$runsJson,"kg_cpu_sec":${best.cpuSec}%.1f,"turns_per_cpu_sec":$turnsPerCpuSec%.1f,"cpu_floor":${kg.cpuFloor}%.1f,"anomaly":${kg.anomaly},"steal_pct":${best.stealPct}%.1f,"headline_steal_pct":$headlineSteal%.1f,"ann_recall_at_5":$annRecall%.3f,"cores":$cpus}""")
     spark.stop()
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ml.SectionTagger
-import graft.operators.{ConvFinalize, TurnExtract}
+import graft.operators.ConvFinalize
 import graft.sources.TranscriptGen
 
 /** Diagnostic twin of [[TagProbe]] for the fact-scale shuffle stage
@@ -23,8 +23,9 @@ object ConvProbe {
     spark.sparkContext.setLogLevel("WARN")
     val tagger = SectionTagger.train(KgPipeline.taggerTrainingFrame(spark, nConvs = 200))
     val turns = TranscriptGen.dataset(spark, nConvs, 42L, 4, 800).cache()
-    val extracted = TurnExtract.extract(
-      SectionTagger.predict(tagger, KgPipeline.cleanTurns(turns))).cache()
+    def extract() = KgPipeline.extractTurns(KgPipeline.cleanTurns(turns), tagger,
+      extractDates = false)
+    val extracted = extract().cache()
     println(s"[probe] extracted=${extracted.count()}")
     // interleave the salted shuffle path and the clustered map-side path so
     // host-noise windows hit both alike
@@ -39,7 +40,7 @@ object ConvProbe {
     // the same A/B fused end-to-end (uncached stages, the bench shape)
     (1 to 2).foreach { i =>
       val t0 = System.nanoTime()
-      val a = KgPipeline.computeTriples(turns, tagger, clusteredConv = false).count()
+      val a = KgPipeline.triplesFromConvs(ConvFinalize.run(extract()).cache()).count()
       println(f"[probe] fused salted pass $i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($a triples)")
       val t1 = System.nanoTime()
       val b = KgPipeline.computeTriples(turns, tagger).count()

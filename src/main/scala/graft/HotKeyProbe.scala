@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ml.SectionTagger
-import graft.operators.{ConvFinalize, Dedup, TurnExtract}
+import graft.operators.{ConvFinalize, Dedup}
 import graft.sources.TranscriptGen
 
 /** Adversarial hot-key stress for the two skew-guarded shuffles
@@ -70,8 +70,8 @@ object HotKeyProbe {
     val turns = TranscriptGen.dataset(spark, nConvs, 42L,
       skewConvs = 1, skewTurns = skewTurns).cache()
     val nTurns = turns.count()
-    val extracted = TurnExtract.extract(
-      SectionTagger.predict(tagger, KgPipeline.cleanTurns(turns))).cache()
+    val extracted = KgPipeline.extractTurns(KgPipeline.cleanTurns(turns), tagger,
+      extractDates = false).cache()
     extracted.count()
     val hotShare = extracted.filter(col("conv_id") === "conv-00000000").count().toDouble / nTurns
     def pass(label: String, f: => Long): (Double, Double, Long) = {

@@ -8,9 +8,11 @@ import graft.model.{Triple, Turn}
 import graft.operators._
 import graft.sources.TranscriptGen
 
-/** End-to-end dataflow S0→S6 (SURVEY §7.1). Stage functions are pure
-  * Dataset transforms so the checkpointing driver (graft.PipelineMain) can
-  * materialize any prefix and resume from it.
+/** End-to-end dataflow S0→S6 (SURVEY §7.1), composed here and nowhere
+  * else. Stage functions are pure Dataset transforms: the fused run
+  * ([[computeTriples]]) chains them, the checkpointing driver
+  * (graft.PipelineMain) materializes each one and resumes from any of
+  * them, and the benches cache and count them one by one.
   */
 object KgPipeline {
 
@@ -41,48 +43,63 @@ object KgPipeline {
       .sortWithinPartitions("text_clean", "category")
   }
 
-  /** S2-S6 from cleaned turns to triples. `extractDates` is the X5 flag
-    * (reference ships it disabled — ExtractInfo.py:131-132).
-    *
-    * `clusteredConv = true` (default) resolves conversations via
-    * [[ConvFinalize.runClustered]] — every caller of this dataflow feeds
-    * conv-clustered, turn-sorted input (transcript tables sorted by
-    * (conv_id, turn_idx), the generator, the stage checkpoints), and the
-    * clustered path keeps the per-turn payload out of the shuffle while
-    * throwing (never corrupting) on contract violations. Pass false for
-    * arbitrarily-ordered inputs.
+  /** S2+S3 — tag every cleaned turn with its section, then extract the
+    * per-turn mentions. `extractDates` is the X5 flag (reference ships it
+    * disabled — ExtractInfo.py:131-132).
     */
-  def triplesFromCleaned(cleaned: DataFrame, tagger: SectionTagger.Trained,
-      extractDates: Boolean = false, clusteredConv: Boolean = true)(
-      implicit spark: SparkSession): Dataset[Triple] = {
-    val tagged = SectionTagger.predict(tagger, cleaned)
-    val extracted = TurnExtract.extract(tagged, extractDates)
-    val convs = (if (clusteredConv) ConvFinalize.runClustered(extracted)
-                 else ConvFinalize.run(extracted)).cache()
+  def extractTurns(cleaned: DataFrame, tagger: SectionTagger.Trained,
+      extractDates: Boolean)(implicit spark: SparkSession): DataFrame =
+    TurnExtract.extract(SectionTagger.predict(tagger, cleaned), extractDates)
 
+  /** S5 scoring — (conv_id, sector, estimated_salary), at most one row per
+    * conversation. Sector and salary estimate resolve against the cached
+    * sector/ISCO frame in ONE conv-scale join chain (si ⟕ location ⟕
+    * broadcast dim), so the emit pays a single conv-scale left join. The
+    * left joins keep exactly the inner-join estimate rows: a missed
+    * location or dim key just leaves estimated_salary null.
+    */
+  def scoreConvs(convs: Dataset[ConvExtract])(implicit spark: SparkSession): DataFrame = {
     val convSkills = convs.select(col("conv_id"), explode(col("skills")).as("skill"))
     val si = Scoring.sectorAndIsco(convSkills).cache()
     val convLoc = convs.toDF().select(col("conv_id"), col("location"))
       .filter(col("location").isNotNull)
-    // sector + salary estimate resolved against si in ONE conv-scale join
-    // chain (si ⟕ convLoc ⟕ broadcast dim) instead of two separate frames
-    // each re-joined to convs — TripleEmit.runEnriched then pays a single
-    // conv-scale left join (2 conv joins total where round 5 paid 3; the
-    // left joins preserve exactly the inner-join estimate rows because a
-    // missed location or dim key just leaves estimated_salary null)
-    val enriched = si.select(col("conv_id"), col("sector"), col("isco3"))
+    si.select(col("conv_id"), col("sector"), col("isco3"))
       .join(convLoc, Seq("conv_id"), "left")
       .join(broadcast(Scoring.estimateDim), Seq("location", "isco3"), "left")
       .select(col("conv_id"), col("sector"), col("estimated_salary"))
-
-    val orgMentions = convs.toDF().select(explode(col("orgs")).as("surface"))
-    val orgCanonical = Linking.canonicalize(orgMentions)
-
-    TripleEmit.runEnriched(convs, enriched, orgCanonical)
   }
 
+  /** S5 linking — the canonical map (surface, canonical) over every org
+    * mention, plus the blocking audit (`metric`, `value`).
+    */
+  def linkOrgs(convs: Dataset[ConvExtract])(
+      implicit spark: SparkSession): (DataFrame, DataFrame) =
+    Linking.canonicalizeWithMetrics(convs.toDF().select(explode(col("orgs")).as("surface")))
+
+  /** S5+S6 from resolved conversations to triples: scoring, linking, then
+    * the emit ([[TripleEmit.runEnriched]]). `convs` is read three times;
+    * callers cache it.
+    */
+  def triplesFromConvs(convs: Dataset[ConvExtract])(
+      implicit spark: SparkSession): Dataset[Triple] = {
+    val enriched = scoreConvs(convs)
+    TripleEmit.runEnriched(convs, enriched, linkOrgs(convs)._1)
+  }
+
+  /** S2-S6 from cleaned turns to triples, fused. S4 resolves conversations
+    * via [[ConvFinalize.runClustered]]: every caller feeds conv-clustered,
+    * turn-sorted input (transcript tables sorted by (conv_id, turn_idx),
+    * the generator, the stage checkpoints), and the clustered path keeps
+    * the per-turn payload out of the shuffle while throwing (never
+    * corrupting) on contract violations. Arbitrarily ordered input goes
+    * through [[ConvFinalize.run]] and [[triplesFromConvs]] instead.
+    */
+  def triplesFromCleaned(cleaned: DataFrame, tagger: SectionTagger.Trained,
+      extractDates: Boolean = false)(implicit spark: SparkSession): Dataset[Triple] =
+    triplesFromConvs(
+      ConvFinalize.runClustered(extractTurns(cleaned, tagger, extractDates)).cache())
+
   def computeTriples(turns: Dataset[Turn], tagger: SectionTagger.Trained,
-      extractDates: Boolean = false, clusteredConv: Boolean = true)(
-      implicit spark: SparkSession): Dataset[Triple] =
-    triplesFromCleaned(cleanTurns(turns), tagger, extractDates, clusteredConv)
+      extractDates: Boolean = false)(implicit spark: SparkSession): Dataset[Triple] =
+    triplesFromCleaned(cleanTurns(turns), tagger, extractDates)
 }

@@ -25,16 +25,22 @@ object Sessions {
       if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-spark") else None
     }
 
-  def local(cores: Int = 32, shufflePartitions: Int = -1, appName: String = "graft"): SparkSession = {
-    val sp = if (shufflePartitions > 0) shufflePartitions else cores
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
+  def local(cores: Int = 32, shufflePartitions: Int = -1, appName: String = "graft"): SparkSession =
+    tuned(SparkSession.builder().master(s"local[$cores]"), appName,
+      if (shufflePartitions > 0) shufflePartitions else cores).getOrCreate()
+
+  /** The tuned defaults every session of this engine runs with, [[local]]
+    * and [[localCluster]] alike, so the bench and the real-executor
+    * scaling gate plan and shuffle the same way.
+    */
+  private def tuned(b: SparkSession.Builder, appName: String,
+      shufflePartitions: Int): SparkSession.Builder = {
+    b.appName(appName)
       // the engine's Catalyst surface (similarity-join rewrite + SQL
       // functions); spark-submit users pass
       // --conf spark.sql.extensions=graft.plans.GraftExtensions instead
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", sp.toString)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -53,9 +59,12 @@ object Sessions {
       // spill-safe sort-merge still wins whenever a partition could be
       // large (the kg emit stage's conv-keyed LeftOuter joins are SMJ only
       // because mapGroups output has no size stats; AQE sees the real
-      // sizes at runtime)
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shjThreshold)
+      // sizes at runtime). Parameterised for A/B runs and cluster
+      // overrides; the defaults are the measured-best local values.
+      .config("spark.sql.join.preferSortMergeJoin",
+        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
+        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
       // bypass-merge shuffle writes ONE FILE PER REDUCE PARTITION per map
       // task and then NIO-merges them (mmap/unmap per file): thread-dump
       // sampling showed that merge at 13% of active executor samples at
@@ -66,14 +75,10 @@ object Sessions {
         sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+    // spark.local.dir propagates to executor JVMs via SparkConf
     localDir.foreach(b.config("spark.local.dir", _))
-    b.getOrCreate()
+    b
   }
-
-  // parameterised for A/B runs and cluster overrides (SPARK_GRAFT_PREFER_SMJ,
-  // SPARK_GRAFT_SHJ_THRESHOLD); local defaults = the measured-best values
-  private def preferSmj: String = sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false")
-  private def shjThreshold: String = sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m")
 
   /** REAL multi-executor session: `local-cluster[n, cores, memMb]` spawns
     * one separate executor JVM per `n` on this host — own heap, GC and
@@ -99,10 +104,8 @@ object Sessions {
       "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
       "sun.security.action", "sun.util.calendar")
       .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED").mkString(" ")
-    val c = SparkSession.builder()
+    val b = SparkSession.builder()
       .master(s"local-cluster[$executors,$coresPerExec,$memMb]")
-      .appName(appName)
-      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.executor.memory", s"${memMb}m")
       .config("spark.executor.extraClassPath", classesDir)
       // ActiveProcessorCount: on a real cluster the container runtime
@@ -113,19 +116,6 @@ object Sessions {
       // capped (measured: s2_tag 15.7 s -> capped matches local[32])
       .config("spark.executor.extraJavaOptions",
         s"-XX:+UseParallelGC -XX:ActiveProcessorCount=$coresPerExec $opens")
-      .config("spark.sql.shuffle.partitions", (executors * coresPerExec).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.autoBroadcastJoinThreshold", (8L * 1024 * 1024).toString)
-      // same join-strategy policy and scratch-dir default as [[local]]
-      // (spark.local.dir propagates to the executor JVMs via SparkConf)
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shjThreshold)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    localDir.foreach(c.config("spark.local.dir", _))
-    c.getOrCreate()
+    tuned(b, appName, executors * coresPerExec).getOrCreate()
   }
 }

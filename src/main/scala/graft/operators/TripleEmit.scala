@@ -69,30 +69,10 @@ object TripleEmit {
     out.toSeq
   }
 
-  def run(
-      convs: Dataset[ConvExtract],
-      sectors: DataFrame,
-      estimates: DataFrame,
-      orgCanonical: DataFrame)(implicit spark: SparkSession): Dataset[Triple] = {
-    import spark.implicits._
-
-    val base = convs.drop("orgs")
-      .join(sectors, Seq("conv_id"), "left")
-      .join(estimates, Seq("conv_id"), "left")
-      .as[ConvFull]
-      .flatMap(convTriples _)
-
-    base.union(orgTriples(convs, orgCanonical))
-  }
-
-  /** One-join variant for the fused pipeline (r6, guide §2.4 "remove
-    * shuffles outright"): `enriched` already carries (conv_id, sector,
-    * estimated_salary) — ≤ 1 row per conv by construction — so the emit
-    * side pays ONE conv-scale left join where [[run]] pays two. Join
-    * associativity makes the two shapes row-identical: sectors and
-    * estimates are both keyed uniquely by conv_id and every estimate key
-    * is an si key, hence convs ⟕ S ⟕ E == convs ⟕ (S ⟕ E). The r5 shape
-    * stays in [[run]] (the frozen bench's stage split calls it).
+  /** The batch emit: `enriched` carries (conv_id, sector,
+    * estimated_salary), at most one row per conv by construction, so the
+    * emit side pays ONE conv-scale left join (guide §2.4 "remove shuffles
+    * outright"); orgs go through the canonical map in a second.
     */
   def runEnriched(
       convs: Dataset[ConvExtract],

@@ -97,10 +97,9 @@ object StreamingTriples {
       .flatMap(i => graft.sources.TranscriptGen.turnsFor(i, 42L, 0, 0))
     val tagger = SectionTagger.train(graft.KgPipeline.taggerTrainingFrame(spark, nConvs = 120))
     val batch = graft.KgPipeline.computeTriples(allTurns.toDS(), tagger).collect().toSet
-    val convs = ConvFinalize.run(TurnExtract.extract(
-      SectionTagger.predict(tagger, graft.KgPipeline.cleanTurns(allTurns.toDS()))))
-    val canon: Map[String, String] = graft.operators.Linking.canonicalize(
-        convs.toDF().select(explode(col("orgs")).as("surface")))
+    val convs = ConvFinalize.runClustered(graft.KgPipeline.extractTurns(
+      graft.KgPipeline.cleanTurns(allTurns.toDS()), tagger, extractDates = false))
+    val canon: Map[String, String] = graft.KgPipeline.linkOrgs(convs)._1
       .select("surface", "canonical").as[(String, String)].collect().toMap
     val stream = MemoryStream[graft.model.Turn]
     val queryName = s"stream_parity_$nConvs"
