@@ -1,5 +1,5 @@
 #!/bin/bash
-# Process-level scaling twin of graft.KernelScale: N side-by-side
+# Process-level scaling twin of `graft.Probe kernel`: N side-by-side
 # single-threaded JVMs (N one-core executors) over the SAME corpus.
 # Reports the kernel-only phase (max of worker sec = wall of the parallel
 # kernel phase, all workers started together) at N=8 and N=32.
@@ -9,7 +9,7 @@ CONVS=${SPARK_GRAFT_KERNEL_CONVS:-120000}
 for N in 8 32; do
   for ((i=0; i<N; i++)); do
     java -Xms1g -Xmx1g -XX:+UseParallelGC \
-      -cp "$CP" graft.KernelScaleWorker $i $N $CONVS > /tmp/kw_$i.out &
+      -cp "$CP" graft.Probe kernel-worker $i $N $CONVS > /tmp/kw_$i.out &
   done
   wait
   python3 - "$N" <<'PY'

@@ -77,7 +77,7 @@ object Bench {
     * why the headline `kg_pipeline` number comes from the un-instrumented
     * runs instead. `unpersistEagerly` drops each upstream cache as soon as
     * its consumer materializes — the memory policy the 100M-turn
-    * AnchorScale leg needs; otherwise every cache stays until the end. The
+    * `Probe anchor` leg needs; otherwise every cache stays until the end. The
     * session's cache is cleared on return (the scoring stage caches its
     * sector/ISCO frame internally). Returns (per-stage seconds, triple
     * count) — ONE decomposition serving both the driver bench and the
@@ -174,7 +174,7 @@ object Bench {
   }
 
   /** Single untimed-train + timed end-to-end run — the measurement unit
-    * ScalingBench interleaves across parallelism levels.
+    * `Probe scaling` interleaves across parallelism levels.
     */
   def kgOnce(spark: SparkSession, nConvs: Long): (Long, Long, Double) = {
     implicit val s: SparkSession = spark

@@ -10,21 +10,6 @@ import org.apache.spark.sql.SparkSession
   * runtime the same way they would on a 1000-executor cluster.
   */
 object Sessions {
-  /** Shuffle/spill scratch space (guide §2.1: "local disk bandwidth for
-    * shuffle files can be the tighter limit"): thread-dump sampling of the
-    * kg pipeline showed ~24% of active executor samples inside shuffle
-    * file open/write/mmap on this sandbox's virtio disk, so default the
-    * local dir to the host's tmpfs when one exists — the standard RAM-disk
-    * shuffle tuning for memory-rich nodes. On a real cluster operators
-    * point this at striped NVMe instead (SPARK_GRAFT_LOCAL_DIR, or leave
-    * unset to fall back to Spark's default java.io.tmpdir behavior).
-    */
-  private def localDir: Option[String] =
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-spark") else None
-    }
-
   def local(cores: Int = 32, shufflePartitions: Int = -1, appName: String = "graft"): SparkSession =
     tuned(SparkSession.builder().master(s"local[$cores]"), appName,
       if (shufflePartitions > 0) shufflePartitions else cores).getOrCreate()
@@ -59,24 +44,26 @@ object Sessions {
       // spill-safe sort-merge still wins whenever a partition could be
       // large (the kg emit stage's conv-keyed LeftOuter joins are SMJ only
       // because mapGroups output has no size stats; AQE sees the real
-      // sizes at runtime). Parameterised for A/B runs and cluster
-      // overrides; the defaults are the measured-best local values.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
+      // sizes at runtime). The values are the measured-best local ones.
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       // bypass-merge shuffle writes ONE FILE PER REDUCE PARTITION per map
       // task and then NIO-merges them (mmap/unmap per file): thread-dump
       // sampling showed that merge at 13% of active executor samples at
       // R=32. Production jobs run R >> 200 where the bypass path never
       // fires, so disabling it is scale-neutral; locally the serialized
       // sort writer produces one spill file per map task instead.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    // spark.local.dir propagates to executor JVMs via SparkConf
-    localDir.foreach(b.config("spark.local.dir", _))
+    // Shuffle/spill scratch (guide §2.1: "local disk bandwidth for shuffle
+    // files can be the tighter limit"): thread-dump sampling of the kg
+    // pipeline on a virtio disk showed ~24% of active executor samples in
+    // shuffle file open/write/mmap. SPARK_GRAFT_LOCAL_DIR points it at a
+    // tmpfs or, on a cluster, striped NVMe; unset, Spark keeps its default
+    // java.io.tmpdir scratch, so nothing lands on RAM-backed storage by
+    // surprise. spark.local.dir propagates to executor JVMs via SparkConf.
+    sys.env.get("SPARK_GRAFT_LOCAL_DIR").foreach(b.config("spark.local.dir", _))
     b
   }
 

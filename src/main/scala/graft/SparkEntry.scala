@@ -89,9 +89,9 @@ object SparkEntry {
   // stopped session + its checkpoint blocks for the JVM's lifetime)
   @volatile private var entryMemo: (SparkSession, DataFrame) = null
 
-  /** Drop the entry memo — timing harnesses (QProf, BenchExtra) call this
-    * between repeated runs so the second measurement re-runs the pipeline
-    * instead of scanning checkpoint blocks.
+  /** Drop the entry memo — timing harnesses (`Probe profile`, `Probe
+    * noop`) call this between repeated runs so the second measurement
+    * re-runs the pipeline instead of scanning checkpoint blocks.
     */
   def clearEntryCache(): Unit = entryMemo = null
 

@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * regexp_extract_all(...))` materialized per row just to take its length.
   *
   * All kernels walk the UTF-8 BYTES of the UTF8String directly — no
-  * per-row java.lang.String materialization (TextScanProbe measured the
+  * per-row java.lang.String materialization (`Probe text-scan` measured the
   * toString copy+decode dominating the char-level first cut). Every
   * decision here is byte-decidable: the `\s` class and all kept charsets
   * are ASCII (single bytes; UTF-8 continuation bytes are >= 0x80 and can

@@ -25,6 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Only the LR pipeline shape compiles; anything else (e.g. the
   * NaiveBayes alternate) falls back to the PipelineModel path.
   */
+@SerialVersionUID(1L)
 final class CompiledTagger(
     val vocab1: java.util.HashMap[String, Integer],
     val vocab2: java.util.HashMap[String, Integer],
@@ -191,10 +192,21 @@ object CompiledTagger {
       size() > foldCacheMax
   }
 
-  private[functions] def foldedFor(t: CompiledTagger): Folded = foldCache.synchronized {
-    val f = foldCache.get(t.uid)
-    if (f != null) f
-    else { val nf = t.buildFolded(); foldCache.put(t.uid, nf); nf }
+  /** The layout is built outside the lock, so one model's build never
+    * stalls tasks of another; two tasks racing on a miss may both build,
+    * which is harmless (layouts are deterministic), and the re-check on
+    * insert hands both the first one published.
+    */
+  private[functions] def foldedFor(t: CompiledTagger): Folded = {
+    val cached = foldCache.synchronized(foldCache.get(t.uid))
+    if (cached != null) cached
+    else {
+      val built = t.buildFolded()
+      foldCache.synchronized {
+        val raced = foldCache.putIfAbsent(t.uid, built)
+        if (raced != null) raced else built
+      }
+    }
   }
 
   import org.apache.spark.ml.PipelineModel

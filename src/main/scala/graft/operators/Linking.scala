@@ -160,7 +160,7 @@ object Linking {
     // count() materializes the cache in one parallel job, so the gated
     // collect below reads cached blocks (a limit()-based gate measured
     // WORSE here: CollectLimit's incremental take re-ran the aggregation
-    // across its scale-up jobs — KgProf stages 254-259, ~0.4 s)
+    // across its scale-up jobs — `Probe profile kg` stages 254-259, ~0.4 s)
     val n = counts.count()
     val local =
       if (n <= localThreshold)

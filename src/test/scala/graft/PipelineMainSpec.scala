@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.model.{Triple, Turn}
+import graft.operators.{ConvExtract, ConvFinalize}
 
 /** The checkpointing driver against the fused run: stage by stage through
   * its tables, PipelineMain must land exactly the triples
@@ -41,5 +42,19 @@ class PipelineMainSpec extends SparkSpec {
     val s4Runs = spark.read.parquet(s"$out/lineage").filter("stage = 's4_conv'")
       .select("run_id").distinct().count()
     assert(s4Runs == 2, "the resume re-ran s4")
+  }
+
+  test("s4 falls back to the salted path when the scan breaks the clustered layout") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-pipeline-s4").resolve("kg").toString
+    // round-robin repartition scatters every conversation's turns
+    spark.read.parquet(s"$out/s3_extract").repartition(4).write.parquet(s"$dir/s3_extract")
+    val log = new java.io.ByteArrayOutputStream()
+    Console.withOut(log)(PipelineMain.run(Array("--out", dir, "--from-stage", "s4", "--to-stage", "s4")))
+    assert(log.toString.contains("falling back to the salted path"), log.toString)
+    val got = spark.read.parquet(s"$dir/s4_conv").as[ConvExtract].collect().toSet
+    val want = ConvFinalize.run(spark.read.parquet(s"$dir/s3_extract")).collect().toSet
+    assert(got.size == 60 && got == want,
+      s"only-driver=${(got -- want).take(3)} only-salted=${(want -- got).take(3)}")
   }
 }
